@@ -7,13 +7,15 @@ grouped-map Pandas UDF: `groupBy(series).applyInPandas(...)` — every
 series trains in parallel on its executor, Arrow moves the batches, and
 the driver never sees the data.
 
-Model: torch is not available in this container, so the default model is a
-deterministic numpy ridge autoregression (closed-form (XᵀX+λI)⁻¹Xᵀy over
-LAGS lagged values, recursive multi-step) — same applyInPandas plumbing,
-schema, and group shape the LSTM would use. If torch IS importable, the
-LSTM path can be slotted into `_fit_predict` without touching the Spark
-side; that branch currently raises NotImplementedError to avoid shipping
-an untestable code path (SURVEY §2.11).
+Model: a deterministic numpy ridge autoregression (closed-form
+(XᵀX+λI)⁻¹Xᵀy over LAGS lagged values, recursive multi-step) — same
+applyInPandas plumbing, schema, and group shape the LSTM would use. torch
+is not a dependency, so there is no LSTM path; one would slot into
+`_fit_predict` without touching the Spark side.
+
+This module is pickled BY VALUE into the grouped-map function: the Python
+workers Spark forks need not be able to import `holochatstats_spark`,
+which they cannot when the driver runs outside the repository root.
 
 Excluded from the hash oracle (rows-only check): the reference model is
 MC-dropout nondeterministic, and float BLAS reductions vary across builds.
@@ -21,10 +23,15 @@ MC-dropout nondeterministic, and float BLAS reductions vary across builds.
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 LAGS = 3
 HORIZON = 3
@@ -59,16 +66,6 @@ def _fit_predict(x: np.ndarray) -> tuple[list[float], str]:
     return out, f"ridge_ar{LAGS}"
 
 
-def _try_torch_lstm(x: np.ndarray) -> tuple[list[float], str]:
-    """LSTM path — requires torch (not in this container)."""
-    import torch  # noqa: F401  (gated: ImportError falls back to ridge)
-
-    raise NotImplementedError(
-        "LSTM training is stubbed: wire forecaster-equivalent torch code "
-        "here when torch is available (reference forecaster.py:201-273)"
-    )
-
-
 def forecast_per_series(
     monthly: DataFrame,
     series_col: str = "series",
@@ -81,10 +78,7 @@ def forecast_per_series(
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(month_col)
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        try:
-            preds, version = _try_torch_lstm(x)
-        except (ImportError, NotImplementedError):
-            preds, version = _fit_predict(x)
+        preds, version = _fit_predict(x)
         return pd.DataFrame(
             {
                 "series": pdf[series_col].iloc[0],

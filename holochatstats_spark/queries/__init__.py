@@ -72,23 +72,7 @@ def register(
 # truncates the tail. The rotation is programmatic: we parse every
 # CORRECTNESS_r*.json at the repo root and sort the registry by the round
 # each query last appeared in (never recorded => round 0 => front of the
-# queue), tie-broken by registration order. Queries whose SEMANTICS changed
-# can be pinned to the very front via _SEMANTICS_CHANGED: {name: round the
-# semantics changed in}. A pin SELF-EXPIRES once a driver row from that
-# round or later lands, so it never burns gate slots re-verifying
-# already-fresh queries (VERDICT r8: the r3 pins wasted 2 of 50 slots per
-# round for three rounds after their fresh rows landed in r5).
-_SEMANTICS_CHANGED: dict[str, int] = {
-    # r9 planted deterministic burst clusters in operators/synth.py
-    # (velocity_bursts_exact non-empty oracle). The burst rows are
-    # new_member/rank=-2/empty-message at an existing event's exact ts, so
-    # the ud aggregate, video time stats, and humor buckets are invariant —
-    # only the three queries that COUNT raw synth-message rows change and
-    # need a fresh driver row.
-    "velocity_bursts_exact": 9,
-    "message_classification": 9,
-    "highlight_windows": 9,
-}
+# queue), tie-broken by registration order.
 
 
 def _last_recorded_round() -> dict[str, int]:
@@ -134,19 +118,7 @@ def gate_order(registry: dict[str, Query]) -> list[str]:
     """Registry names sorted least-recently-driver-recorded first."""
     last = _last_recorded_round()
     reg_pos = {n: i for i, n in enumerate(registry)}
-    # a pin holds only until a driver row from the change round (or later)
-    # lands — then it expires and the query rejoins the staleness order
-    pinned = [
-        n
-        for n, changed_rnd in _SEMANTICS_CHANGED.items()
-        if n in registry and last.get(n, 0) < changed_rnd
-    ]
-
-    def key(name: str) -> tuple[int, int]:
-        return (last.get(name, 0), reg_pos[name])
-
-    rest = sorted((n for n in registry if n not in pinned), key=key)
-    return pinned + rest
+    return sorted(registry, key=lambda n: (last.get(n, 0), reg_pos[n]))
 
 
 def load_all_queries() -> dict[str, Query]:

@@ -1,7 +1,6 @@
 """Multimodal queries: binary-payload feature extraction, frame sampling,
 and per-modality rollups — the image/audio/video surface of the
-training-data pipeline (operators/multimodal.py holds the plumbing + the
-import-gated real-decoder stubs).
+training-data pipeline (operators/multimodal.py holds the plumbing).
 
 r22: feature extraction is fully native (guide §4.1) — the r21 mapInPandas
 stage only computed length/md5/modulo expressions, so the Python boundary

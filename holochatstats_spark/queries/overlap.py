@@ -175,6 +175,11 @@ def exclusive_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     COALESCE(n_exclusive, 0) (a singleton user's only type always appears
     in totals, so the join never invented rows). Plan: 2 FileScans + a
     join → 1 FileScan, no join. Guide §1.2/§2.4.
+
+    Invariant: the input's `event_type` is never NULL (no row of the test
+    data at any scale factor has one). `collect_set` drops NULLs, so on a nullable source a NULL
+    group in the oracle's GROUP BY totals would vanish here, and a user
+    whose only events are NULL-typed would not be counted at all.
     """
     ev = load_table(spark, sf_dir, "events")
     sets = ev.groupBy("user_id").agg(

@@ -381,12 +381,16 @@ def _threshold_edges(sims: DataFrame) -> DataFrame:
 
 
 def _type_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise cosine over event-type user vectors (V1 long form).
+    """Pairwise cosine over event-type user vectors (V1 long form), shared
+    by type_cosine_similarity, similarity_edges and channel_clustering.
 
-    Postings shape (same rewrite as type_cosine_similarity): one per-user
-    collect_list, double-explode a≤b, the diagonal of the summed matrix
-    doubles as the squared norms — replaces the r20 w⋈w self-join + norms
-    pass that re-derived the weight lineage four times."""
+    One per-user collect_list feeds a double-explode (a.type ≤ b.type):
+    the diagonal of the resulting type×type sum IS the squared norms, so
+    ONE aggregate yields both dots and norms and the per-(type, user)
+    weight lineage is derived once (a w⋈w self-join plus a norms pass
+    derived it four times). Per-user fanout is bounded by #types. Guide
+    §2.4/§1.2.
+    """
     ev = load_table(spark, sf_dir, "events")
     w = ev.groupBy("user_id", "event_type").agg(
         F.count("*").cast("double").alias("cnt")
@@ -405,6 +409,8 @@ def _type_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.event_type").alias("type_a"),
         F.col("b.event_type").alias("type_b"),
     ).agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"))
+    # norms attached via diagonal windows over the tiny K×K matrix — the
+    # `d` lineage is planned and run exactly once (no norms re-derivation)
     diag = F.max(F.when(F.col("type_a") == F.col("type_b"), F.col("dot")))
     return (
         d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("type_a"))))
@@ -425,9 +431,8 @@ def _type_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # V4 — channel clustering (api.py:418-487: V1 similarity → V3 threshold →
 # Leiden). Distributed up to the edge list; the graph partition runs on
-# the driver (operators/graph.py: leiden if importable, else deterministic
-# greedy modularity, else components). Rows-only: community detection is
-# fenced from the hash oracle (SURVEY §5).
+# the driver (operators/graph.py: deterministic greedy modularity).
+# Rows-only: community detection is fenced from the hash oracle (SURVEY §5).
 # ---------------------------------------------------------------------------
 @register(
     "channel_clustering",

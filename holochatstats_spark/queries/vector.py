@@ -116,51 +116,11 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def type_cosine_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Never materializes the wide user×type matrix (SURVEY §7: A13 must
-    stay long at 100 TB) — all pairs come from each user's postings list.
+    stay long at 100 TB); the shared builder is similarity._type_sims."""
+    # imported here, not at module top: the registry keeps its order
+    from holochatstats_spark.queries.similarity import _type_sims
 
-    r20 ran a w⋈w self-join on user_id plus a separate norms pass — the
-    per-(type, user) weight lineage appeared four times (33 Exchange / 4
-    FileScan nodes). Now one per-user collect_list feeds a double-explode
-    (a.type ≤ b.type): the diagonal of the resulting type×type sum IS the
-    squared norms, so ONE aggregate yields both dots and norms. Per-user
-    fanout is bounded by #types, same as the join. Same rounded cosines,
-    unchanged DuckDB twin. Guide §2.4/§1.2.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    w = ev.groupBy("event_type", "user_id").agg(
-        F.count("*").cast("double").alias("cnt")
-    )
-    peruser = w.groupBy("user_id").agg(
-        F.collect_list(F.struct("event_type", "cnt")).alias("ms")
-    )
-    pairs = (
-        peruser.select(F.col("ms"), F.explode("ms").alias("a"))
-        .select(F.col("a"), F.explode("ms").alias("b"))
-        .where(F.col("a.event_type") <= F.col("b.event_type"))
-    )
-    from pyspark.sql import Window
-
-    d = pairs.groupBy(
-        F.col("a.event_type").alias("type_a"),
-        F.col("b.event_type").alias("type_b"),
-    ).agg(F.sum(F.col("a.cnt") * F.col("b.cnt")).alias("dot"))
-    # norms attached via diagonal windows over the tiny K×K matrix — the
-    # `d` lineage is planned and run exactly once (no norms re-derivation)
-    diag = F.max(F.when(F.col("type_a") == F.col("type_b"), F.col("dot")))
-    return (
-        d.withColumn("na", F.sqrt(diag.over(Window.partitionBy("type_a"))))
-        .withColumn("nb", F.sqrt(diag.over(Window.partitionBy("type_b"))))
-        .where(F.col("type_a") < F.col("type_b"))
-        .select(
-            "type_a",
-            "type_b",
-            F.round(
-                F.col("dot") / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .orderBy("type_a", "type_b")
-    )
+    return _type_sims(spark, sf_dir).orderBy("type_a", "type_b")
 
 
 # ---------------------------------------------------------------------------

@@ -53,9 +53,20 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _count_setting(name: str, default: str, star_ok: bool = False) -> str:
+    """Read an integer env setting and reject bad values before the JVM
+    starts, instead of failing obscurely at master parse or first shuffle."""
+    raw = os.environ.get(name, default)
+    if (star_ok and raw == "*") or (raw.isascii() and raw.isdigit() and int(raw) > 0):
+        return raw
+    expected = "a positive integer" + (" or '*'" if star_ok else "")
+    raise ValueError(f"{name}={raw!r}: expected {expected}")
+
+
 def get_spark(app_name: str = "holochatstats-spark") -> SparkSession:
     """Create (or reuse) a local session shaped like our cluster profile."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = _count_setting("SPARK_GRAFT_CPUS", "*", star_ok=True)
+    partitions = _count_setting("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -63,10 +74,7 @@ def get_spark(app_name: str = "holochatstats-spark") -> SparkSession:
         # value every recorded bench used); cluster-side override via env —
         # size so post-shuffle partitions land ~128-256 MB (guide §2.2),
         # e.g. ~400k for a 100 TB shuffle — and let AQE coalesce down.
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-        )
+        .config("spark.sql.shuffle.partitions", partitions)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dims here are KB-scale; broadcast aggressively. AQE will also
         # convert to broadcast at runtime when a side is small post-filter.
